@@ -1,5 +1,5 @@
-"""Per-SparkContext pandas_udf memo (the operators/simsearch._memo_udf
-pattern, shared): a pandas_udf object memoizes its JVM handle on first
+"""Per-SparkContext pandas_udf memo, shared by every operator that
+caches a kernel: a pandas_udf object memoizes its JVM handle on first
 use, so caching one across a context restart leaves it pointing into a
 dead JVM (ADVICE r9). Keying the cache WEAKLY on the live SparkContext
 object gives per-context reuse with automatic invalidation — a fresh

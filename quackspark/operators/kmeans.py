@@ -237,10 +237,14 @@ def _driver_lloyd(ids, A, k: int, iters: int):
 
 def _driver_probe(vecs: DataFrame, cap: int | None):
     """limit-probe for the driver fast path: collect at most cap+1
-    (vec_id, embedding) rows. Returns the pandas frame when the corpus
-    fits and is clean (no NULLs, rectangular vectors), else None —
-    conservative, never wrong. Long-sum mode only: the decimal exact-sum
-    mode would need a different update replication."""
+    (vec_id, embedding) rows. Returns (ids int64[N], A float64[N×DIM])
+    when the corpus fits and is clean, else None — conservative, never
+    wrong. Clean means no NULL vectors, rectangular vectors, and every
+    element finite with |x·1e6| < 2^52: NaN/NULL elements and larger
+    magnitudes break _round_micro_half_away's float fast path (and
+    overflow its int64 cast), so they take the distributed loop. Long-sum
+    mode only: the decimal exact-sum mode would need a different update
+    replication."""
     if cap is None:
         cap = int(
             os.environ.get(
@@ -273,7 +277,13 @@ def _driver_probe(vecs: DataFrame, cap: int | None):
     dims = {len(v) for v in head["embedding"]}
     if len(dims) != 1 or 0 in dims:
         return None
-    return head
+    import numpy as np
+
+    A = np.vstack(head["embedding"].to_numpy()).astype(np.float64)
+    with np.errstate(over="ignore"):  # |x| near DBL_MAX: inf fails the bound
+        if not np.isfinite(A).all() or (np.abs(A * 1_000_000.0) >= 2.0**52).any():
+            return None
+    return head["vec_id"].to_numpy().astype(np.int64), A
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -311,12 +321,11 @@ def kmeans_fit(
     KMEANS_DRIVER_ROW_CAP); ``0`` forces the distributed loop (tests pin
     driver == distributed on the same corpus)."""
     vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    head = _driver_probe(vecs, driver_cap) if iters >= 2 else None
-    if head is not None:
+    probed = _driver_probe(vecs, driver_cap) if iters >= 2 else None
+    if probed is not None:
         import numpy as np
 
-        ids = head["vec_id"].to_numpy().astype(np.int64)
-        A = np.vstack(head["embedding"].to_numpy()).astype(np.float64)
+        ids, A = probed
         clusters, C, _, _ = _driver_lloyd(ids, A, k, iters)
         import pandas as pd
         from pyspark.sql.types import (
@@ -383,16 +392,15 @@ def kmeans_assign(
     driver == distributed by tests/test_opt_r14.py. ``driver_cap=0``
     forces the distributed path."""
     vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    head = _driver_probe(vecs, driver_cap) if iters >= 2 else None
-    if head is not None:
+    probed = _driver_probe(vecs, driver_cap) if iters >= 2 else None
+    if probed is not None:
         import numpy as np
         import pandas as pd
         from pyspark.sql.types import (
             DoubleType, IntegerType, LongType, StructField, StructType,
         )
 
-        ids = head["vec_id"].to_numpy().astype(np.int64)
-        A = np.vstack(head["embedding"].to_numpy()).astype(np.float64)
+        ids, A = probed
         clusters, _, best, d2 = _driver_lloyd(ids, A, k, iters)
         out = pd.DataFrame(
             {

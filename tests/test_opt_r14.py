@@ -48,6 +48,39 @@ def test_kmeans_driver_boundary_micro_values(spark):
     assert drv == dist
 
 
+@pytest.mark.parametrize(
+    "bad",
+    [float("nan"), None, float("inf"), 2.0**52 / 1e6, -1e13],
+    ids=["nan", "null-element", "inf", "micro-2^52", "micro-overflow"],
+)
+def test_kmeans_driver_unclean_elements_fall_back(spark, bad):
+    """NaN / NULL / infinite elements and cells with |x·1e6| >= 2^52 are
+    outside _round_micro_half_away's exact range (floor(x+0.5) misrounds
+    at 2^52, the int64 cast overflows to INT64_MIN): the probe must
+    refuse them, and the fast-path entry points must then agree with the
+    distributed loop."""
+    rows = [(i, [0.25 * i, 1.0 - 0.125 * i, 3.0]) for i in range(20)]
+    rows[7] = (7, [0.5, bad, 1.0])
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    vecs = df.select("vec_id", "embedding")
+    assert KM._driver_probe(vecs, 100) is None
+    drv = _rows(KM.kmeans_assign(df, k=4, iters=2), "vec_id")
+    dist = _rows(KM.kmeans_assign(df, k=4, iters=2, driver_cap=0), "vec_id")
+    assert repr(drv) == repr(dist)  # repr: NaN != NaN under ==
+    fd = _rows(KM.kmeans_fit(df, k=4, iters=2), "cluster")
+    fx = _rows(KM.kmeans_fit(df, k=4, iters=2, driver_cap=0), "cluster")
+    assert repr(fd) == repr(fx)
+
+
+def test_kmeans_probe_accepts_just_below_2_52(spark):
+    """The magnitude gate is strict |x·1e6| < 2^52, not a blanket cap:
+    a clean corpus just under it still takes the driver fast path."""
+    rows = [(i, [float(i), -4.0e9]) for i in range(4)]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    ids, A = KM._driver_probe(df.select("vec_id", "embedding"), 100)
+    assert list(ids) == [0, 1, 2, 3] and A.shape == (4, 2)
+
+
 def test_kmeans_probe_fallbacks(spark):
     """NULL vectors, non-long ids, and a cap below the corpus size all
     fall back to the distributed loop (probe returns None)."""

@@ -49,13 +49,15 @@ def main() -> int:
     if args.bare:
         from pyspark.sql import SparkSession
 
+        from quackspark.session import default_driver_memory
+
         spark = (
             SparkSession.builder.master(
                 f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]"
             )
             .appName("bare-parity")
             .config("spark.sql.session.timeZone", "America/New_York")
-            .config("spark.driver.memory", "16g")
+            .config("spark.driver.memory", default_driver_memory())
             .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
         )

@@ -76,7 +76,7 @@ def run_worker(master: str) -> int:
 
     import bench
     from quackspark.entry import queries
-    from quackspark.session import apply_runtime_presets, _register_compat_udfs
+    from quackspark.session import CODEGEN_CACHE_MAX_ENTRIES, prepare_session
 
     cores = 32 if "32" in master or "[2,16" in master or "[4,8" in master else 16
     builder = (
@@ -92,6 +92,7 @@ def run_worker(master: str) -> int:
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.driver.memory", "8g")
     )
     if master.startswith("local-cluster"):
@@ -101,8 +102,7 @@ def run_worker(master: str) -> int:
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    apply_runtime_presets(spark)
-    _register_compat_udfs(spark)
+    prepare_session(spark)
 
     qs = queries()
     out: dict[str, float] = {}
